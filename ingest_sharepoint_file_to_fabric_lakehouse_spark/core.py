@@ -135,8 +135,9 @@ def recommended_session_conf(
 
     Apply on the builder::
 
-        b = SparkSession.builder.master("local[8]")
-        for k, v in recommended_session_conf(8).items():
+        cpus = session_cpus()
+        b = SparkSession.builder.master(f"local[{cpus}]")
+        for k, v in recommended_session_conf(cpus).items():
             b = b.config(k, v)
 
     * ``spark.sql.codegen.cache.maxEntries`` — STATIC conf, read once
@@ -164,6 +165,13 @@ def recommended_session_conf(
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     return conf
+
+
+def session_cpus() -> int:
+    """Local-mode width for a harness session: ``$SPARK_GRAFT_CPUS``,
+    else the CPUs this process may use.  A hard-coded ``local[32]`` on
+    a 4-CPU host runs every timing 8x oversubscribed."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 _TABLE_CACHE: dict[tuple, DataFrame] = {}

@@ -4,23 +4,33 @@ capability (SharePoint → lakehouse bronze), re-expressed Spark-native.
 Pipeline (mirrors sharepoint_to_bronze_delta.py end-to-end, but
 distributed and incremental):
 
-1. discover: folder listing → manifest DataFrame with per-folder
-   config (A-1/A-10/A-11; is-file filter A-9; name sanitizer A-15).
-2. incremental: manifest ANTI JOIN ingestion log on (folder, name,
-   mtime) — re-runs skip already-ingested files, and a *modified*
-   file (new mtime) is re-ingested; fixes the reference's
-   re-copy-everything behavior (SURVEY.md §4.1).
+1. discover: one driver-side folder listing per run — the Graph
+   ``children`` call (A-1; is-file filter A-9).  Per-folder config
+   (A-10/A-11) and the name sanitizer (A-15) are applied to the
+   delta's rows in Python; no Spark job runs here.
+2. incremental: the listing's (folder, name, mtime) keys are
+   broadcast, the ingestion log's key columns are LEFT SEMI joined
+   against them, and the matches (at most one row per listed file)
+   are collected and subtracted on the driver.  Re-runs skip
+   already-ingested files, and a *modified* file (new mtime) is
+   re-ingested; fixes the reference's re-copy-everything behavior
+   (SURVEY.md §4.1).  The driver holds the listing already, so the
+   delta is a subset of it: its size and min-mtime watermark are
+   ``len``/``min`` in Python, and no count job runs.
 3. transfer: ``binaryFile`` scan over the configured folders with a
    ``modifiedAfter`` watermark pushed into file listing — only files
-   at-or-after the oldest new mtime are opened, content flows
+   at-or-after the oldest new mtime are opened, and content flows
    executor-side, never through driver RAM (anti-pattern at
-   sharepoint_to_bronze_delta.py:166-170), and the driver sees only
-   two control-plane scalars (delta count + watermark), never a
-   path list.
+   sharepoint_to_bronze_delta.py:166-170).  The delta's metadata
+   joins the scan as a small Arrow-built frame.
 4. land: bronze parquet with (file metadata, content, sha256).
 5. log + post-commit: append ingestion log with timestamped archive
    names (A-16, :189-191) only after the bronze write commits —
    copy→verify→log ordering the reference lacks (:222-231).
+
+Every read of the log and of the bronze read-back uses a pinned
+schema (``LOG_SCHEMA``/``BRONZE_META_SCHEMA``), so no read pays a
+schema-inference job; a missing log still raises ``AnalysisException``.
 
 The "SharePoint" side is a local directory fixture (the real Graph
 connector would slot in at `list_source_files`; auth A-22 stays a
@@ -43,6 +53,30 @@ FOLDER_CONFIG = [
     ("assets", "Files/assets", False, False),
     ("shared", "Files/shared", True, True),
 ]
+
+# The per-run delta's metadata as it joins the content scan.
+_DELTA_SCHEMA = (
+    "folder_name string, file_name string, target_name string, "
+    "lakehouse_folder string, size_bytes bigint, mtime_epoch bigint"
+)
+# The bronze files' columns minus ``content``: the read-back that
+# derives the log reads only these, so content bytes are never re-read.
+BRONZE_META_SCHEMA = _DELTA_SCHEMA + ", content_sha256 string, status string"
+# ``_ingestion_log`` exactly as ``run_ingest`` writes it.  A pinned
+# reader returns nulls for a drifted column instead of failing, so a
+# test compares this against the written files.
+LOG_SCHEMA = (
+    "folder_name string, file_name string, target_name string, "
+    "lakehouse_folder string, copy_to_archive boolean, delete_original boolean, "
+    "size_bytes bigint, mtime_epoch bigint, content_sha256 string, status string, "
+    "archive_name string, ingested_at timestamp"
+)
+_KEY = ["folder_name", "file_name", "mtime_epoch"]
+_KEY_SCHEMA = "folder_name string, file_name string, mtime_epoch bigint"
+
+
+def _names(ddl: str) -> list[str]:
+    return [c.split()[0] for c in ddl.split(", ")]
 
 
 def make_source_fixture(root: str) -> None:
@@ -83,39 +117,6 @@ def list_source_files(root: str, folders: list[str]) -> list[dict]:
     return rows
 
 
-def discover_manifest(spark: SparkSession, root: str) -> DataFrame:
-    """Listing → typed manifest DataFrame (A-10/A-11): per-folder
-    config joined in, quote-sanitized target names (A-15), boolean
-    flags typed at the edge (A-17)."""
-    import pandas as pd
-
-    listing = list_source_files(root, [f for f, *_ in FOLDER_CONFIG])
-    schema = (
-        "file_name string, folder_name string, file_path string, "
-        "size_bytes long, mtime_epoch long"
-    )
-    fcols = ["file_name", "folder_name", "file_path", "size_bytes", "mtime_epoch"]
-    # pandas + Arrow conversion: stays JVM-side after the driver handoff
-    # (a list-of-tuples createDataFrame would pickle to a Python RDD and
-    # pay Python-worker spin-up on every downstream action)
-    files = (
-        spark.createDataFrame(
-            pd.DataFrame([tuple(r[c] for c in fcols) for r in listing], columns=fcols),
-            schema,
-        )
-        if listing
-        else spark.createDataFrame([], schema)
-    )
-    ccols = ["folder_name", "lakehouse_folder", "copy_to_archive", "delete_original"]
-    cfg = spark.createDataFrame(
-        pd.DataFrame(FOLDER_CONFIG, columns=ccols),
-        "folder_name string, lakehouse_folder string, copy_to_archive boolean, delete_original boolean",
-    )
-    return files.join(F.broadcast(cfg), "folder_name").withColumn(
-        "target_name", F.regexp_replace("file_name", "'", "_")
-    )
-
-
 def run_ingest(
     spark: SparkSession,
     source_root: str,
@@ -128,67 +129,76 @@ def run_ingest(
     ``run_ts`` is an injected clock (Asia/Kuala_Lumpur wall time in the
     reference, :116-122) so archive names are deterministic in tests.
     """
-    # The whole run is sized by the per-run DELTA listing, not the
-    # corpus: 32 shuffle tasks over a 9-row manifest is pure scheduler
-    # latency (4 measured 2.1 s → 1.85 s; 1 shaves another ~0.3 s of
-    # task-launch overhead across the pipeline's ~10 jobs).  Shuffle
-    # width is therefore a TUNING PARAMETER derived from the delta
-    # size (the driver-side listing is already in hand, so the
-    # estimate is free): ~10k manifest rows per task, capped at the
-    # session's parallelism — at a real 100 TB ingest with millions of
-    # changed files this lands at full cluster width, while the
-    # fixture-scale delta keeps the measured width-1 fast path.
-    # Callers with better knowledge (e.g. a known-huge backfill) pass
-    # an explicit width.
-    if shuffle_width is None:
-        n_delta = len(list_source_files(source_root, [f for f, *_ in FOLDER_CONFIG]))
-        shuffle_width = max(
-            1, min(spark.sparkContext.defaultParallelism, n_delta // 10_000 + 1)
-        )
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
-    try:
-        return _run_ingest_inner(spark, source_root, bronze_root, run_ts)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-
-def _run_ingest_inner(
-    spark: SparkSession,
-    source_root: str,
-    bronze_root: str,
-    run_ts: str,
-) -> DataFrame:
     log_path = os.path.join(bronze_root, "_ingestion_log")
-    bronze_path = os.path.join(bronze_root, "bronze_files")
-    manifest = discover_manifest(spark, source_root)
+    listing = list_source_files(source_root, [f for f, *_ in FOLDER_CONFIG])
+    delta = _unlogged(spark, listing, log_path)
+    if delta:
+        # The landing join shuffles when the content scan is too big to
+        # broadcast.  Its width is a TUNING PARAMETER sized by the
+        # per-run delta, not the corpus: 32 shuffle tasks over a 9-row
+        # delta is pure scheduler latency.  ~10k delta rows per task,
+        # capped at the session's parallelism — at a real 100 TB ingest
+        # with millions of changed files this lands at full cluster
+        # width, while a fixture-scale delta keeps the width-1 fast
+        # path.  Callers with better knowledge (e.g. a known-huge
+        # backfill) pass an explicit width.
+        if shuffle_width is None:
+            shuffle_width = max(
+                1, min(spark.sparkContext.defaultParallelism, len(delta) // 10_000 + 1)
+            )
+        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
+        try:
+            _land(spark, source_root, bronze_root, delta, run_ts)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+    return spark.read.schema(LOG_SCHEMA).parquet(log_path)
+
+
+def _unlogged(spark: SparkSession, listing: list[dict], log_path: str) -> list[dict]:
+    """The listed files whose (folder, name, mtime) key is not in the
+    ingestion log: unseen files AND seen-but-modified files (new mtime)
+    both re-ingest."""
+    import pandas as pd
+    from pyspark.errors import AnalysisException
 
     # Narrow catch: only a MISSING log means "first run, ingest all".
     # A transient IO/permission error must surface, not silently
     # reclassify the whole source as new (which would duplicate every
     # file into bronze on a 100 TB ingest).
-    from pyspark.errors import AnalysisException
-
     try:
-        log = spark.read.parquet(log_path)
-        # (folder, name, mtime) key: unseen files AND seen-but-modified
-        # files (new mtime) both survive the anti-join and re-ingest.
-        new_files = manifest.join(
-            log.select("folder_name", "file_name", "mtime_epoch"),
-            ["folder_name", "file_name", "mtime_epoch"],
-            "left_anti",
-        )
+        log = spark.read.schema(LOG_SCHEMA).parquet(log_path)
     except AnalysisException:
-        new_files = manifest  # first run: no log written yet
+        return listing
+    if not listing:
+        return []
+    # pandas + Arrow conversion: a small listing becomes a local
+    # relation (a list-of-tuples createDataFrame would pickle to a
+    # Python RDD and pay Python-worker spin-up).  The semi join returns
+    # at most one log row per listed file, so what crosses to the
+    # driver is bounded by the listing, not by the log's history.
+    keys = spark.createDataFrame(pd.DataFrame(listing)[_KEY], _KEY_SCHEMA)
+    seen = set(
+        map(tuple, log.select(*_KEY).join(F.broadcast(keys), _KEY, "left_semi").collect())
+    )
+    return [r for r in listing if tuple(r[c] for c in _KEY) not in seen]
 
-    # Control-plane scalars only cross to the driver — a count and a
-    # min-mtime watermark — never a data-proportional path list (at
-    # 100 TB-scale ingest the per-run delta can be millions of files).
-    stats = new_files.agg(
-        F.count("*").alias("n"), F.min("mtime_epoch").alias("wm")
-    ).first()
-    if stats["n"] == 0:
-        return spark.read.parquet(log_path)
+
+def _land(
+    spark: SparkSession, source_root: str, bronze_root: str, delta: list[dict], run_ts: str
+) -> None:
+    """Copy the delta's content into a new bronze run directory, then
+    append the log rows derived from what landed."""
+    from datetime import datetime, timezone
+
+    import pandas as pd
+
+    lakehouse = {f: lf for f, lf, *_ in FOLDER_CONFIG}
+    meta = pd.DataFrame(delta).assign(
+        target_name=lambda d: d["file_name"].str.replace("'", "_"),  # A-15
+        lakehouse_folder=lambda d: d["folder_name"].map(lakehouse),
+    )
+    new_files = spark.createDataFrame(meta[_names(_DELTA_SCHEMA)], _DELTA_SCHEMA)
 
     # executor-side content scan bounded to the new files (A-2,
     # distributed): the binaryFile source pushes `modifiedAfter` down
@@ -196,14 +206,14 @@ def _run_ingest_inner(
     # mtime are even opened (-1s: the listing's mtime_epoch floors the
     # filesystem's sub-second mtime, and modifiedAfter is strictly
     # greater-than).  Already-ingested stragglers inside that window
-    # are dropped by the join back to `new_files` below.  Scanned
-    # roots come from FOLDER_CONFIG (static config), so excluded
-    # folders (the reference's Teams-Wiki filter) are never listed.
-    from datetime import datetime, timezone
-
-    wm = datetime.fromtimestamp(int(stats["wm"]) - 1, tz=timezone.utc).strftime(
-        "%Y-%m-%dT%H:%M:%S"
-    )
+    # are dropped by the join to `new_files` below.  A listed file that
+    # vanished before the scan lands as `error:missing-content` (A-21);
+    # an explicit path list would raise instead.  Scanned roots come
+    # from FOLDER_CONFIG (static config), so excluded folders (the
+    # reference's Teams-Wiki filter) are never listed.
+    wm = datetime.fromtimestamp(
+        min(r["mtime_epoch"] for r in delta) - 1, tz=timezone.utc
+    ).strftime("%Y-%m-%dT%H:%M:%S")
     roots = [
         os.path.join(source_root, f)
         for f, *_ in FOLDER_CONFIG
@@ -218,12 +228,7 @@ def _run_ingest_inner(
         .select("folder_name", "file_name", "length", "content")
     )
     landed = new_files.join(blobs, ["folder_name", "file_name"], "left").select(
-        "folder_name",
-        "file_name",
-        "target_name",
-        "lakehouse_folder",
-        "size_bytes",
-        "mtime_epoch",
+        *_names(_DELTA_SCHEMA),
         F.sha2(F.coalesce(F.col("content"), F.lit(b"")), 256).alias("content_sha256"),
         F.when(F.col("content").isNotNull() | (F.col("size_bytes") == 0), F.lit("ingested"))
         .otherwise(F.lit("error:missing-content"))
@@ -239,6 +244,7 @@ def _run_ingest_inner(
     # counter is a driver-side listing of partition dirs; on a real
     # lakehouse this is the same one FileSystem.listStatus call any
     # committer makes.)
+    bronze_path = os.path.join(bronze_root, "bronze_files")
     os.makedirs(bronze_path, exist_ok=True)
     run_id = sum(1 for d in os.listdir(bronze_path) if d.startswith("ingest_run="))
     delta_path = os.path.join(bronze_path, f"ingest_run={run_id}")
@@ -247,32 +253,13 @@ def _run_ingest_inner(
     # post-commit log append with timestamped archive names (A-16
     # :189-191): copy→verify→log ordering — the log row is derived from
     # what actually landed, not from what we intended to land.
-    import pandas as pd
-
-    flags = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, a, d) for f, _lf, a, d in FOLDER_CONFIG],
-            columns=["folder_name", "copy_to_archive", "delete_original"],
-        ),
-        "folder_name string, copy_to_archive boolean, delete_original boolean",
-    )
     ts = F.to_timestamp(F.lit(run_ts))
-    log_delta = (
-        spark.read.parquet(delta_path)
-        .drop("content")  # column pruning: content bytes never re-read
-        .join(F.broadcast(flags), "folder_name")
-        .select(
-            "folder_name",
-            "file_name",
-            "target_name",
-            "lakehouse_folder",
-            "copy_to_archive",
-            "delete_original",
-            "size_bytes",
-            "mtime_epoch",
-            "content_sha256",
-            "status",
-        )
+    folder = F.col("folder_name")
+    (
+        spark.read.schema(BRONZE_META_SCHEMA)
+        .parquet(delta_path)
+        .withColumn("copy_to_archive", folder.isin([f for f, _lf, a, _d in FOLDER_CONFIG if a]))
+        .withColumn("delete_original", folder.isin([f for f, _lf, _a, d in FOLDER_CONFIG if d]))
         .withColumn(
             "archive_name",
             F.when(
@@ -283,9 +270,10 @@ def _run_ingest_inner(
             ),
         )
         .withColumn("ingested_at", ts)
+        .select(*_names(LOG_SCHEMA))
+        .write.mode("append")
+        .parquet(os.path.join(bronze_root, "_ingestion_log"))
     )
-    log_delta.write.mode("append").parquet(log_path)
-    return spark.read.parquet(log_path)
 
 
 @query(

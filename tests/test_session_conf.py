@@ -91,3 +91,27 @@ def test_mark_conf_dirty_is_per_application(spark):
     core._PREP_PINNED.discard("some-other-application-id")
     core.prep(spark)  # re-pin for the rest of the suite
     assert spark.sparkContext.applicationId in core._PREP_PINNED
+
+
+def test_tools_take_their_width_from_the_environment(monkeypatch):
+    """No harness under tools/ may hard-code a ``local[<n>]`` master: a
+    ``local[32]`` on a 4-CPU host runs every timing 8x oversubscribed.
+    Widths come from ``core.session_cpus()``, i.e. $SPARK_GRAFT_CPUS or
+    the CPUs the process may use."""
+    import glob
+    import os
+    import re
+
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import session_cpus
+
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    paths = sorted(glob.glob(os.path.join(tools, "*.py")))
+    assert paths
+    for path in paths:
+        hits = re.findall(r"local\[\s*\d+\s*\]", open(path).read())
+        assert not hits, f"{path} hard-codes a {hits[0]} master"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert session_cpus() == len(os.sched_getaffinity(0))

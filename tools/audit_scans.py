@@ -80,8 +80,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import session_cpus
+
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{session_cpus()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -22,10 +22,12 @@ def main() -> None:
 
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
         recommended_session_conf,
+        session_cpus,
     )
 
-    builder = SparkSession.builder.master("local[32]")
-    for k, v in recommended_session_conf(32).items():
+    cpus = session_cpus()
+    builder = SparkSession.builder.master(f"local[{cpus}]")
+    for k, v in recommended_session_conf(cpus).items():
         builder = builder.config(k, v)
     spark = (
         builder.config("spark.driver.memory", "8g")

@@ -157,12 +157,15 @@ def main() -> None:
 
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
         recommended_session_conf,
+        session_cpus,
     )
 
     # engine-recommended session conf (codegen class cache sized to the
     # registry — STATIC, build-time only — plus UTC/AQE/Arrow): single
     # source of truth; see core.recommended_session_conf
-    builder = SparkSession.builder.master("local[8]")
+    # 8 shuffle partitions at any session width: the lockfile was
+    # recorded at 8
+    builder = SparkSession.builder.master(f"local[{session_cpus()}]")
     for k, v in recommended_session_conf(8).items():
         builder = builder.config(k, v)
     spark = (

@@ -66,8 +66,10 @@ def probe(spark, parts: int) -> float:
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import session_cpus
+
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{session_cpus()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .appName("recovery-scale-probe")

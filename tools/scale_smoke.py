@@ -197,10 +197,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import session_cpus
+
     spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
+        SparkSession.builder.master(f"local[{session_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", "12g")
         .config("spark.sql.session.timeZone", "UTC")

@@ -49,13 +49,15 @@ def main() -> None:
 
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
         recommended_session_conf,
+        session_cpus,
     )
 
-    builder = SparkSession.builder.master("local[32]")
+    cpus = session_cpus()
+    builder = SparkSession.builder.master(f"local[{cpus}]")
     # engine-recommended session conf (single source of truth in
     # core.recommended_session_conf; the codegen class cache entry is
     # static — builder-time only)
-    for k, v in recommended_session_conf(32).items():
+    for k, v in recommended_session_conf(cpus).items():
         builder = builder.config(k, v)
     spark = (
         builder
