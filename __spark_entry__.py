@@ -51,71 +51,71 @@ engine.load_all()
 # These rotate to the back of queries(); keys never driver-checked
 # sort directly after the window.
 _DRIVER_VERIFIED = {
-    "agg_approx_quantile", "agg_bitmap_distinct", "agg_bool",
-    "agg_cms_portable", "agg_collect", "agg_corr_moments",
-    "agg_count_distinct", "agg_cube", "agg_empty_check",
-    "agg_exact_median_twopass", "agg_exact_quantile_grouped",
-    "agg_group_sum", "agg_grouping_sets", "agg_having",
-    "agg_histogram_fixed", "agg_incremental_merge",
-    "agg_incremental_rollup", "agg_min_max_by", "agg_mode_top_freq",
-    "agg_percentile", "agg_rollup", "agg_sketch_hll_merge", "agg_stats",
-    "array_ops", "cast_types", "cond_case_when", "corpus_mix_weights",
-    "corpus_quality_weighted_sample", "corpus_sample_stratified",
-    "corpus_shuffle_shard", "date_arith", "date_format_tz",
-    "date_series_gapfill", "dedup_cluster_cc", "dedup_distinct_rows",
-    "dedup_edit_distance_blocked", "dedup_embedding_cosine",
-    "dedup_exact_hash", "dedup_minhash_portable", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_simhash_portable", "dedup_subset_keyed",
-    "dq_expectations", "events_ab_ttest", "events_anomaly_zscore",
+    "agg_approx_distinct", "agg_bitmap_distinct", "agg_cms_portable",
+    "agg_collect", "agg_corr_moments", "agg_count_distinct", "agg_cube",
+    "agg_empty_check", "agg_exact_median_twopass",
+    "agg_exact_quantile_grouped", "agg_group_sum", "agg_grouping_sets",
+    "agg_having", "agg_histogram_fixed", "agg_incremental_merge",
+    "agg_min_max_by", "agg_mode_top_freq", "agg_percentile", "agg_rollup",
+    "agg_sketch_hll_merge", "agg_stats", "array_ops", "cast_types",
+    "cond_case_when", "corpus_quality_weighted_sample",
+    "corpus_sample_stratified", "date_arith", "date_format_tz",
+    "date_series_gapfill", "dedup_distinct_rows",
+    "dedup_edit_distance_blocked", "dedup_ngram_jaccard", "dedup_simhash",
+    "dedup_simhash_portable", "dedup_subset_keyed", "dq_expectations",
+    "events_ab_ttest", "events_anomaly_zscore",
     "events_attribution_lasttouch", "events_changepoint_cusum",
     "events_cooccurrence_lift", "events_dau_wau_mau", "events_ewma",
     "events_forecast_snaive", "events_markov_transitions",
     "events_resample_ohlc", "events_rolling_distinct",
     "events_sequence_pattern", "events_session_stats", "events_trend_ols",
-    "events_user_features", "events_user_retention", "explode_lateral",
-    "filter_between_date", "filter_comparison", "filter_exists_subquery",
-    "filter_in_set", "filter_like", "filter_null", "flagship_q3_topk",
-    "funnel_conversion", "geo_grid_nearest", "graph_bfs_reachability",
-    "graph_pagerank", "hash_funcs", "ingest_pipeline", "join_asof_latest",
+    "events_user_features", "explode_lateral", "filter_between_date",
+    "filter_comparison", "filter_exists_subquery", "filter_in_set",
+    "filter_like", "filter_null", "flagship_q3_topk", "funnel_conversion",
+    "geo_grid_nearest", "graph_pagerank", "hash_funcs",
     "join_asof_nearest", "join_asof_next_within", "join_broadcast_dim",
     "join_bucketed", "join_cross", "join_dynamic_partition_pruned",
     "join_interval_banded", "join_interval_overlap", "join_lateral_topn",
     "join_left_anti", "join_left_semi", "join_multikey_chain",
     "join_null_safe_eq", "join_null_skew_split", "join_outer_full",
     "join_outer_left", "join_scd2_pointintime", "join_shuffle_large",
-    "join_skew_salted", "join_theta_range", "limit_n", "map_json_ops",
-    "math_expr", "multimodal_binary_meta", "multimodal_chunk_binary",
-    "multimodal_embed_ann", "multimodal_frame_sample",
+    "join_skew_salted", "limit_n", "math_expr", "multimodal_binary_meta",
+    "multimodal_chunk_binary", "multimodal_embed_ann",
     "multimodal_resize_meta", "orders_benford_digits",
     "orders_cohort_ltv", "orders_open_backlog", "orders_pareto_abc",
     "orders_rfm_segments", "pivot_wide", "project_rename_drop",
     "project_select", "scalar_subquery", "scan_binaryfile",
-    "scan_csv_malformed", "scan_datasource_sharepoint", "scan_json_lines",
-    "scan_observe_metrics", "scan_parquet_nested",
+    "scan_csv_malformed", "scan_csv_schema", "scan_manifest",
+    "scan_observe_metrics", "scan_parquet", "scan_parquet_nested",
     "scan_partition_pruned", "scan_rowgroup_skipping",
-    "scan_schema_evolution", "scan_table_stats", "sim_grouped_centroid",
+    "scan_schema_evolution", "scan_table_stats", "set_except",
+    "set_intersect", "set_union_all", "set_union_distinct",
     "sim_ivf_partition_pruned", "sim_ivf_probe", "sim_ivf_recall_eval",
-    "sim_kmeans_build", "sim_mmr_diversify", "sim_radius_search",
-    "sim_topk_bruteforce", "sim_topk_lsh", "sim_topk_lsh_portable",
-    "sink_compact_small_files", "sink_csv_export", "sink_delta_merge",
-    "sink_scd2_merge", "sink_snapshot_diff", "sink_zorder_layout",
-    "sort_multi_nulls", "sql_api_parameterized", "sql_api_q1",
-    "sql_api_q10", "sql_api_q11", "sql_api_q12", "sql_api_q13",
-    "sql_api_q14", "sql_api_q15", "sql_api_q16", "sql_api_q17",
-    "sql_api_q18", "sql_api_q19", "sql_api_q20", "sql_api_q21",
+    "sim_kmeans_build", "sim_mmr_diversify", "sim_topk_lsh",
+    "sim_topk_lsh_portable", "sim_vector_quantize_int8",
+    "sink_compact_small_files", "sink_csv_export", "sink_parquet",
+    "sink_partitioned", "sink_scd2_merge", "sink_snapshot_diff",
+    "sink_zorder_layout", "sort_multi_nulls", "sql_api_parameterized",
+    "sql_api_q1", "sql_api_q10", "sql_api_q11", "sql_api_q12",
+    "sql_api_q13", "sql_api_q14", "sql_api_q15", "sql_api_q16",
+    "sql_api_q17", "sql_api_q19", "sql_api_q20", "sql_api_q21",
     "sql_api_q22", "sql_api_q4", "sql_api_q5", "sql_api_q6", "sql_api_q7",
-    "sql_api_q8", "sql_api_q9", "stream_additive_state_merge",
-    "stream_datasource_sharepoint", "stream_dedup", "stream_dedup_resume",
-    "stream_foreach_sink", "stream_session", "stream_session_live",
-    "stream_sliding", "stream_stateful_custom", "stream_static_join",
-    "stream_stream_join", "stream_stream_outer_join", "stream_tumbling",
-    "stream_tumbling_live", "stream_watermark_late",
-    "stream_watermark_resume", "string_agg_ordered", "text_bpe_tokenize",
-    "text_chunk_overlap", "text_dataset_split", "text_decontaminate",
-    "text_duplicate_spans", "text_fingerprint", "text_ngram_entropy",
-    "text_pack_sequences", "text_pii_scrub", "text_repetition_filter",
-    "tfidf_top_terms", "topk_per_group", "udf_cogrouped_asof",
-    "udtf_lateral_python", "unpivot_long", "vocab_bpe_merges",
+    "sql_api_q8", "sql_api_q9", "str_basic", "str_regex",
+    "stream_additive_state_merge", "stream_datasource_sharepoint",
+    "stream_dedup", "stream_dedup_resume", "stream_foreach_sink",
+    "stream_session_live", "stream_sliding", "stream_stateful_custom",
+    "stream_static_join", "stream_stream_join",
+    "stream_stream_outer_join", "stream_tumbling", "stream_tumbling_live",
+    "stream_watermark_late", "stream_watermark_resume",
+    "string_agg_ordered", "text_bpe_tokenize", "text_chunk_overlap",
+    "text_dataset_split", "text_decontaminate", "text_duplicate_spans",
+    "text_feature_hashing", "text_fingerprint", "text_lang_filter",
+    "text_langid_ngram", "text_ngram_entropy", "text_pack_sequences",
+    "text_pii_scrub", "text_quality_score", "text_repetition_filter",
+    "text_stats", "text_token_count", "tfidf_top_terms", "topk_per_group",
+    "udaf_pandas_grouped", "udf_cogrouped_asof", "udf_pandas_cosine",
+    "udf_pandas_scalar", "udf_python_scalar", "udtf_lateral_python",
+    "udtf_map_in_pandas", "unpivot_long", "vocab_bpe_merges",
     "vocab_pmi_collocations", "vocab_topk", "vocab_zipf_fit",
     "win_cumulative_distinct", "win_distribution", "win_first_last",
     "win_gaps_islands", "win_lag_lead", "win_moving_avg",
@@ -160,14 +160,15 @@ _WINDOW_50 = [
     "search_bm25", "search_hybrid_rrf", "sim_lsh_dup_witness",
     "sim_lsh_recall_eval", "sim_pq_adc_topk", "sim_topk_ivfpq",
     "sink_merge_partitioned", "sql_api_q2", "text_boilerplate_ratio",
-    "text_lm_quality", "scan_csv_schema", "scan_manifest", "scan_parquet",
-    "set_except", "set_intersect", "set_union_all", "set_union_distinct",
-    "sim_vector_quantize_int8", "sink_parquet", "sink_partitioned",
-    "str_basic", "str_regex", "text_feature_hashing", "text_lang_filter",
-    "text_langid_ngram", "text_quality_score", "text_stats",
-    "text_token_count", "udaf_pandas_grouped", "udf_pandas_cosine",
-    "udf_pandas_scalar", "udf_python_scalar", "udtf_map_in_pandas",
-    "agg_approx_distinct",
+    "text_lm_quality", "graph_bfs_reachability", "ingest_pipeline",
+    "sink_delta_merge", "agg_approx_quantile", "agg_bool",
+    "agg_incremental_rollup", "corpus_mix_weights",
+    "corpus_shuffle_shard", "dedup_cluster_cc", "dedup_embedding_cosine",
+    "dedup_exact_hash", "dedup_minhash_portable", "events_user_retention",
+    "join_asof_latest", "join_theta_range", "map_json_ops",
+    "multimodal_frame_sample", "scan_datasource_sharepoint",
+    "scan_json_lines", "sim_grouped_centroid", "sim_radius_search",
+    "sim_topk_bruteforce", "sql_api_q18", "stream_session",
 ]
 
 

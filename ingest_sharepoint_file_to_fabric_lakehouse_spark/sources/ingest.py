@@ -8,15 +8,13 @@ distributed and incremental):
    ``children`` call (A-1; is-file filter A-9).  Per-folder config
    (A-10/A-11) and the name sanitizer (A-15) are applied to the
    delta's rows in Python; no Spark job runs here.
-2. incremental: the listing's (folder, name, mtime) keys are
-   broadcast, the ingestion log's key columns are LEFT SEMI joined
-   against them, and the matches (at most one row per listed file)
-   are collected and subtracted on the driver.  Re-runs skip
+2. incremental: the driver reads only the ingestion log's key
+   columns (folder, name, mtime) with pyarrow and subtracts them from
+   the listing in Python; no Spark job runs.  Re-runs skip
    already-ingested files, and a *modified* file (new mtime) is
    re-ingested; fixes the reference's re-copy-everything behavior
-   (SURVEY.md §4.1).  The driver holds the listing already, so the
-   delta is a subset of it: its size and min-mtime watermark are
-   ``len``/``min`` in Python, and no count job runs.
+   (SURVEY.md §4.1).  The delta is a subset of the listing, so its
+   size and min-mtime watermark are ``len``/``min`` in Python.
 3. transfer: ``binaryFile`` scan over the configured folders with a
    ``modifiedAfter`` watermark pushed into file listing — only files
    at-or-after the oldest new mtime are opened, and content flows
@@ -24,13 +22,15 @@ distributed and incremental):
    sharepoint_to_bronze_delta.py:166-170).  The delta's metadata
    joins the scan as a small Arrow-built frame.
 4. land: bronze parquet with (file metadata, content, sha256).
-5. log + post-commit: append ingestion log with timestamped archive
-   names (A-16, :189-191) only after the bronze write commits —
-   copy→verify→log ordering the reference lacks (:222-231).
+5. log + post-commit: after the bronze write commits, the driver reads
+   the run's metadata columns back, derives the timestamped archive
+   names (A-16, :189-191) and appends ONE parquet file to the log —
+   the copy→verify→log ordering the reference lacks (:222-231).
 
-Every read of the log and of the bronze read-back uses a pinned
-schema (``LOG_SCHEMA``/``BRONZE_META_SCHEMA``), so no read pays a
-schema-inference job; a missing log still raises ``AnalysisException``.
+Spark jobs carry only content; the log is control data, read and
+written on the driver (as Delta Lake keeps its transaction log) with
+the pinned ``LOG_SCHEMA``.  Only a missing log directory means "first
+run, ingest everything"; any other read error raises.
 
 The "SharePoint" side is a local directory fixture (the real Graph
 connector would slot in at `list_source_files`; auth A-22 stays a
@@ -62,9 +62,9 @@ _DELTA_SCHEMA = (
 # The bronze files' columns minus ``content``: the read-back that
 # derives the log reads only these, so content bytes are never re-read.
 BRONZE_META_SCHEMA = _DELTA_SCHEMA + ", content_sha256 string, status string"
-# ``_ingestion_log`` exactly as ``run_ingest`` writes it.  A pinned
-# reader returns nulls for a drifted column instead of failing, so a
-# test compares this against the written files.
+# ``_ingestion_log`` exactly as ``run_ingest`` writes it: the driver's
+# Arrow writer schema derives from it.  A pinned reader returns nulls
+# for a drifted column instead of failing, so a test checks the files.
 LOG_SCHEMA = (
     "folder_name string, file_name string, target_name string, "
     "lakehouse_folder string, copy_to_archive boolean, delete_original boolean, "
@@ -72,11 +72,18 @@ LOG_SCHEMA = (
     "archive_name string, ingested_at timestamp"
 )
 _KEY = ["folder_name", "file_name", "mtime_epoch"]
-_KEY_SCHEMA = "folder_name string, file_name string, mtime_epoch bigint"
 
 
 def _names(ddl: str) -> list[str]:
     return [c.split()[0] for c in ddl.split(", ")]
+
+
+def _log_arrow_schema():
+    """``LOG_SCHEMA`` as the Arrow schema the driver reads and writes."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(LOG_SCHEMA))
 
 
 def make_source_fixture(root: str) -> None:
@@ -131,17 +138,12 @@ def run_ingest(
     """
     log_path = os.path.join(bronze_root, "_ingestion_log")
     listing = list_source_files(source_root, [f for f, *_ in FOLDER_CONFIG])
-    delta = _unlogged(spark, listing, log_path)
+    delta = _unlogged(listing, log_path)
     if delta:
-        # The landing join shuffles when the content scan is too big to
-        # broadcast.  Its width is a TUNING PARAMETER sized by the
-        # per-run delta, not the corpus: 32 shuffle tasks over a 9-row
-        # delta is pure scheduler latency.  ~10k delta rows per task,
-        # capped at the session's parallelism — at a real 100 TB ingest
-        # with millions of changed files this lands at full cluster
-        # width, while a fixture-scale delta keeps the width-1 fast
-        # path.  Callers with better knowledge (e.g. a known-huge
-        # backfill) pass an explicit width.
+        # The landing join's shuffle width is sized by the per-run
+        # delta, not the corpus (32 tasks over a 9-row delta is pure
+        # scheduler latency): ~10k delta rows per task, capped at the
+        # session's parallelism.  An explicit ``shuffle_width`` wins.
         if shuffle_width is None:
             shuffle_width = max(
                 1, min(spark.sparkContext.defaultParallelism, len(delta) // 10_000 + 1)
@@ -149,46 +151,38 @@ def run_ingest(
         prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_width))
         try:
-            _land(spark, source_root, bronze_root, delta, run_ts)
+            landed = _land(spark, source_root, bronze_root, delta)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        _append_log(landed, log_path, run_ts, spark.conf.get("spark.sql.session.timeZone"))
+    if not os.path.isdir(log_path):  # nothing listed, nothing ever logged
+        return spark.createDataFrame([], LOG_SCHEMA)
     return spark.read.schema(LOG_SCHEMA).parquet(log_path)
 
 
-def _unlogged(spark: SparkSession, listing: list[dict], log_path: str) -> list[dict]:
+def _unlogged(listing: list[dict], log_path: str) -> list[dict]:
     """The listed files whose (folder, name, mtime) key is not in the
     ingestion log: unseen files AND seen-but-modified files (new mtime)
-    both re-ingest."""
-    import pandas as pd
-    from pyspark.errors import AnalysisException
+    both re-ingest.  Only the log's key columns cross to the driver."""
+    import pyarrow.parquet as pq
 
+    if not listing:
+        return []
     # Narrow catch: only a MISSING log means "first run, ingest all".
     # A transient IO/permission error must surface, not silently
     # reclassify the whole source as new (which would duplicate every
     # file into bronze on a 100 TB ingest).
     try:
-        log = spark.read.schema(LOG_SCHEMA).parquet(log_path)
-    except AnalysisException:
+        log = pq.read_table(log_path, columns=_KEY, schema=_log_arrow_schema())
+    except FileNotFoundError:
         return listing
-    if not listing:
-        return []
-    # pandas + Arrow conversion: a small listing becomes a local
-    # relation (a list-of-tuples createDataFrame would pickle to a
-    # Python RDD and pay Python-worker spin-up).  The semi join returns
-    # at most one log row per listed file, so what crosses to the
-    # driver is bounded by the listing, not by the log's history.
-    keys = spark.createDataFrame(pd.DataFrame(listing)[_KEY], _KEY_SCHEMA)
-    seen = set(
-        map(tuple, log.select(*_KEY).join(F.broadcast(keys), _KEY, "left_semi").collect())
-    )
+    seen = set(zip(*(log.column(c).to_pylist() for c in _KEY)))
     return [r for r in listing if tuple(r[c] for c in _KEY) not in seen]
 
 
-def _land(
-    spark: SparkSession, source_root: str, bronze_root: str, delta: list[dict], run_ts: str
-) -> None:
-    """Copy the delta's content into a new bronze run directory, then
-    append the log rows derived from what landed."""
+def _land(spark: SparkSession, source_root: str, bronze_root: str, delta: list[dict]) -> str:
+    """Copy the delta's content into a new bronze run directory; return
+    its path once the write has committed."""
     from datetime import datetime, timezone
 
     import pandas as pd
@@ -210,7 +204,8 @@ def _land(
     # vanished before the scan lands as `error:missing-content` (A-21);
     # an explicit path list would raise instead.  Scanned roots come
     # from FOLDER_CONFIG (static config), so excluded folders (the
-    # reference's Teams-Wiki filter) are never listed.
+    # reference's Teams-Wiki filter) are never listed.  The watermark
+    # is UTC; the scan would otherwise read it in the session zone.
     wm = datetime.fromtimestamp(
         min(r["mtime_epoch"] for r in delta) - 1, tz=timezone.utc
     ).strftime("%Y-%m-%dT%H:%M:%S")
@@ -222,6 +217,7 @@ def _land(
     blobs = (
         spark.read.format("binaryFile")
         .option("modifiedAfter", wm)
+        .option("timeZone", "UTC")
         .load(roots)
         .withColumn("file_name", F.element_at(F.split("path", "/"), -1))
         .withColumn("folder_name", F.element_at(F.split("path", "/"), -2))
@@ -236,44 +232,54 @@ def _land(
         F.col("content"),
     )
     # bronze landing (A-3): content + metadata, one run-scoped partition
-    # directory per ingest run.  Writing the delta to its own directory
-    # means the log append below can derive from the COMMITTED bronze
-    # files instead of re-running the binaryFile scan + sha256 — at
-    # 100 TB the content pass happens exactly once, and the read-back
-    # is column-pruned so content bytes are never re-read.  (The run
-    # counter is a driver-side listing of partition dirs; on a real
-    # lakehouse this is the same one FileSystem.listStatus call any
-    # committer makes.)
+    # directory per ingest run, so the log append derives from the
+    # COMMITTED files' metadata columns instead of re-running the scan +
+    # sha256: the content pass happens exactly once.
     bronze_path = os.path.join(bronze_root, "bronze_files")
     os.makedirs(bronze_path, exist_ok=True)
     run_id = sum(1 for d in os.listdir(bronze_path) if d.startswith("ingest_run="))
     delta_path = os.path.join(bronze_path, f"ingest_run={run_id}")
     landed.write.mode("overwrite").parquet(delta_path)
+    return delta_path
 
-    # post-commit log append with timestamped archive names (A-16
-    # :189-191): copy→verify→log ordering — the log row is derived from
-    # what actually landed, not from what we intended to land.
-    ts = F.to_timestamp(F.lit(run_ts))
-    folder = F.col("folder_name")
-    (
-        spark.read.schema(BRONZE_META_SCHEMA)
-        .parquet(delta_path)
-        .withColumn("copy_to_archive", folder.isin([f for f, _lf, a, _d in FOLDER_CONFIG if a]))
-        .withColumn("delete_original", folder.isin([f for f, _lf, _a, d in FOLDER_CONFIG if d]))
-        .withColumn(
-            "archive_name",
-            F.when(
-                F.col("copy_to_archive"),
-                F.concat_ws(
-                    "_", F.date_format(ts, "ddMMyyHHmmss"), F.col("target_name")
-                ),
-            ),
-        )
-        .withColumn("ingested_at", ts)
-        .select(*_names(LOG_SCHEMA))
-        .write.mode("append")
-        .parquet(os.path.join(bronze_root, "_ingestion_log"))
+
+def _append_log(delta_path: str, log_path: str, run_ts: str, tz: str) -> None:
+    """Append one log file derived from what landed in ``delta_path``,
+    not from what we intended to land.  ``ingested_at`` and the archive
+    prefix are ``run_ts`` read in the session zone ``tz``, as
+    ``to_timestamp``/``date_format(.., 'ddMMyyHHmmss')`` compute them."""
+    import uuid
+    from datetime import datetime, timezone
+    from zoneinfo import ZoneInfo
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        zone = ZoneInfo(tz)
+    except (ValueError, KeyError):  # an offset zone such as "+08:00"
+        zone = datetime.strptime(tz, "%z").tzinfo
+    at = datetime.fromisoformat(run_ts)
+    at = (at if at.tzinfo else at.replace(tzinfo=zone)).astimezone(timezone.utc)
+    prefix = at.astimezone(zone).strftime("%d%m%y%H%M%S")
+
+    landed = pq.read_table(delta_path, columns=_names(BRONZE_META_SCHEMA)).to_pandas()
+    folder = landed["folder_name"]
+    copy = folder.isin([f for f, _lf, a, _d in FOLDER_CONFIG if a])
+    log = landed.assign(
+        copy_to_archive=copy,
+        delete_original=folder.isin([f for f, _lf, _a, d in FOLDER_CONFIG if d]),
+        archive_name=(prefix + "_" + landed["target_name"]).where(copy, None),
+        ingested_at=at,
     )
+    # a hidden temp file renamed into place: Spark and pyarrow skip
+    # dot-files, so a crash never exposes a partial log file
+    os.makedirs(log_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(log_path, f".{name}.tmp")
+    schema = _log_arrow_schema()
+    pq.write_table(pa.Table.from_pandas(log[schema.names], schema=schema, preserve_index=False), tmp)
+    os.replace(tmp, os.path.join(log_path, name))
 
 
 @query(
@@ -303,27 +309,24 @@ def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Strong check: the source fixture, run timestamps, and mtimes are
     all pinned, so the expected log — including the re-ingested row
     for the modified file and its second archive name — is a literal
-    table.  A wrong anti-join key (the round-1 advice finding: keying
+    table.  A wrong delta key (the round-1 advice finding: keying
     only (folder, name) misses modified files) now fails the gate.
 
-    Steady-state gate (the streaming drain discipline): the bronze
-    ingestion log is DURABLE incremental state — the reference's own
-    design never replays ingested history — and the three-run
-    lifecycle over the pinned fixture is deterministic, so a completed
-    lifecycle is stamped and reruns read the materialized log (still
-    value-checked against the literal oracle every run).  The
-    lifecycle semantics stay independently pinned by the run_ingest
-    tests in tests/test_operators.py, which always start cold, and
-    the ingest GROWTH claims by tools/scale_smoke.py's cold/no-op
-    file-count probe.  Bump the token when the fixture or run
-    timestamps change."""
+    Steady-state gate (the streaming drain discipline): the ingestion
+    log is DURABLE incremental state and the three-run lifecycle over
+    the pinned fixture is deterministic, so a completed lifecycle is
+    stamped and reruns read the materialized log (still value-checked
+    against the literal oracle every run).  The run_ingest tests in
+    tests/test_operators.py and tests/test_ingest.py always start cold.
+    Bump the token when the fixture, the run timestamps or the log's
+    writer or file layout change."""
     import shutil
 
     from ..streaming.streams import _drained_current, _stamp_drained
 
     base = f"/tmp/sgdata/{os.path.basename(sf_dir.rstrip('/'))}/ingest"
     src, bronze = f"{base}/source", f"{base}/bronze"
-    token = "ingest_lifecycle_v1"
+    token = "ingest_lifecycle_v2"
     if not _drained_current(base, token):
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(base, exist_ok=True)
@@ -337,13 +340,8 @@ def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(changed, (4102444800, 4102444800))  # 2100-01-01, > any real mtime
         run_ingest(spark, src, bronze, run_ts="2024-06-02 09:00:00")
         _stamp_drained(base, token)
-    log = spark.read.parquet(os.path.join(bronze, "_ingestion_log"))
+    log = spark.read.schema(LOG_SCHEMA).parquet(os.path.join(bronze, "_ingestion_log"))
     return log.select(
-        "folder_name",
-        "file_name",
-        "target_name",
-        "size_bytes",
-        "content_sha256",
-        "status",
+        "folder_name", "file_name", "target_name", "size_bytes", "content_sha256", "status",
         "archive_name",
     ).orderBy("folder_name", "file_name", "content_sha256")

@@ -20,8 +20,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+sys.path.insert(0, ROOT)
 
 import bench_contamination_check as bcc  # noqa: E402
 

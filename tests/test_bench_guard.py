@@ -18,9 +18,11 @@ exactly why the sampler is a pure module-level function.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
 

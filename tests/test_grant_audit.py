@@ -4,9 +4,11 @@ probe, paginated tenant listing, and the semi-join audit DataFrame."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from setup.grant_audit import (  # noqa: E402
     grant_write,

@@ -13,9 +13,11 @@ shapes on synthetic plan strings.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from plan_budget import strip_initial_sections  # noqa: E402
 

@@ -8,9 +8,11 @@ actually CARRIES the conf — i.e. conftest really consumed it.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (  # noqa: E402
     recommended_session_conf,
@@ -41,11 +43,11 @@ def test_harnesses_consume_the_single_source():
     """No harness may re-introduce the literal: the conf name appears in
     bench/conftest/check_oracle/plan_budget only via the import."""
     for path in (
-        "/root/repo/bench.py",
-        "/root/repo/tests/conftest.py",
-        "/root/repo/tools/check_oracle.py",
-        "/root/repo/tools/plan_budget.py",
-        "/root/repo/tools/time_keys.py",
+        os.path.join(ROOT, "bench.py"),
+        os.path.join(ROOT, "tests/conftest.py"),
+        os.path.join(ROOT, "tools/check_oracle.py"),
+        os.path.join(ROOT, "tools/plan_budget.py"),
+        os.path.join(ROOT, "tools/time_keys.py"),
     ):
         src = open(path).read()
         assert "recommended_session_conf" in src, path
@@ -115,3 +117,19 @@ def test_tools_take_their_width_from_the_environment(monkeypatch):
     assert session_cpus() == 3
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert session_cpus() == len(os.sched_getaffinity(0))
+
+
+def test_no_harness_puts_a_literal_path_on_sys_path():
+    """A literal absolute ``sys.path`` entry makes pytest or a tool run
+    from a copied checkout import the original checkout's code instead
+    of the copy's.  Every harness resolves its root from ``__file__``."""
+    import glob
+    import re
+
+    literal = re.compile(r"""sys\.path\.(?:insert|append)\([^)]*?["']/""")
+    paths = [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "__spark_entry__.py")]
+    for d in ("tests", "tools", "setup"):
+        paths += glob.glob(os.path.join(ROOT, d, "*.py"))
+    for path in sorted(paths):
+        for n, line in enumerate(open(path), 1):
+            assert not literal.search(line), f"{path}:{n} puts a literal path on sys.path"

@@ -4,9 +4,11 @@ token refresh, filters — the logic the reference lacks or gets wrong)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ingest_sharepoint_file_to_fabric_lakehouse_spark.sources.sharepoint import (  # noqa: E402
     GraphAuth,

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 
 import ingest_sharepoint_file_to_fabric_lakehouse_spark as engine  # noqa: F401
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_multiprobe_expands_to_exact_bucket_plus_one_bit_flips(spark):
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.operators.similarity import (
@@ -232,7 +234,7 @@ def test_staged_build_serializes_across_real_processes(tmp_path):
     os.makedirs(marker_dir)
     worker = f"""
 import os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
     .config("spark.sql.shuffle.partitions", "2")

@@ -28,7 +28,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -113,7 +114,9 @@ def main():
     import __spark_entry__ as e
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("CHECK_CPUS", "8")
+    from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import session_cpus
+
+    cpus = os.environ.get("CHECK_CPUS") or str(session_cpus())
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", os.environ.get("CHECK_PARTS", cpus))

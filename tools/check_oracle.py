@@ -28,13 +28,15 @@ Usage:  python tools/check_oracle.py [sf_dir] [key ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -147,9 +149,10 @@ def main():
 
     from ingest_sharepoint_file_to_fabric_lakehouse_spark.core import (
         recommended_session_conf,
+        session_cpus,
     )
 
-    cpus = os.environ.get("CHECK_CPUS", "8")
+    cpus = os.environ.get("CHECK_CPUS") or str(session_cpus())
     # engine-recommended session conf (codegen class cache sized to the
     # registry — STATIC, build-time only — plus UTC/AQE/Arrow): single
     # source of truth; see core.recommended_session_conf
@@ -204,7 +207,7 @@ def main():
     # it at any sf both forms can hold.
     staged_replays = {}
     if os.environ.get("CHECK_STAGED_ORACLE") == "1":
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, os.path.join(ROOT, "tools"))
         import staged_minhash_oracle
 
         staged_replays["dedup_fuzzy_minhash"] = staged_minhash_oracle.run_staged

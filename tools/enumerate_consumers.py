@@ -22,9 +22,11 @@ rotation queue, oldest first).
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -78,12 +80,10 @@ def main() -> int:
             if getattr(mod, n, None) is orig:
                 setattr(mod, n, (staging_targets | merge_targets)[n])
 
-    import os
-
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('CHECK_CPUS', '8')}]")
+        SparkSession.builder.master(f"local[{os.environ.get('CHECK_CPUS') or core.session_cpus()}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
@@ -121,7 +121,7 @@ def _propose_window(consumers: list[str], all_keys: list[str]) -> dict:
     import re
 
     latest: dict[str, int] = {}
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", f).group(1))
         for k in json.load(open(f)):
             latest[k] = max(latest.get(k, 0), rnd)

@@ -9,9 +9,11 @@ Usage: python tools/explain_all.py [sf_dir] [key ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def audit(key: str, plan: str) -> list[str]:

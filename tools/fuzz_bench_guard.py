@@ -18,10 +18,12 @@ Exit 1 on any violated invariant (prints the falsifying shape).
 from __future__ import annotations
 
 import random
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 import bench  # noqa: E402
 from test_bench_guard import SimHost, _medians  # noqa: E402

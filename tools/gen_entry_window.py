@@ -26,11 +26,13 @@ Usage: python tools/gen_entry_window.py [--check]
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 import textwrap
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # r16 (optimization round): every key whose EXECUTED code this round's
 # optimization edits touch — 14 direct query-body rewrites, the
@@ -56,6 +58,11 @@ CONSUMER_PINS: list[str] = [
     "search_hybrid_rrf", "sim_lsh_dup_witness", "sim_lsh_recall_eval",
     "sim_pq_adc_topk", "sim_topk_ivfpq", "sink_merge_partitioned",
     "sql_api_q2", "text_boilerplate_ratio", "text_lm_quality",
+    # keys whose executed code changed after that window was cut:
+    # ingest_pipeline (driver-side delta and log append, new log file
+    # layout), graph_bfs_reachability (visited-union checkpoint removed)
+    # and sink_delta_merge (REBALANCE-clustered merge writes)
+    "graph_bfs_reachability", "ingest_pipeline", "sink_delta_merge",
 ]
 
 WINDOW_SIZE = 50
@@ -65,7 +72,7 @@ def latest_verdicts() -> dict[str, int]:
     import glob
 
     latest: dict[str, int] = {}
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(f.split("_r")[1].split(".")[0])
         for k, v in json.load(open(f)).items():
             if isinstance(v, dict):
@@ -117,7 +124,7 @@ def main() -> int:
         )
         return 0
 
-    path = "/root/repo/__spark_entry__.py"
+    path = os.path.join(ROOT, "__spark_entry__.py")
     src = open(path).read()
     src = re.sub(
         r"_DRIVER_VERIFIED = \{.*?\n\}",

@@ -236,15 +236,16 @@ def main() -> None:
         """Transfer-path growth probe: a fresh source tree with
         ``n_files`` blobs through run_ingest (cold = full ingest,
         warm = incremental no-op re-run over the same tree — the
-        steady state is the anti-join against the log, which must
-        stay ~flat in already-ingested volume)."""
+        steady state is the driver-side read of the log's key columns
+        and the subtraction from the listing, which must stay ~flat in
+        already-ingested volume)."""
         from ingest_sharepoint_file_to_fabric_lakehouse_spark.sources.ingest import run_ingest
 
         base = os.path.join(scratch_root, f"sg_ingest_smoke_{n_files}")
         shutil.rmtree(base, ignore_errors=True)
         src, bronze = f"{base}/source", f"{base}/bronze"
         # 'assets' keeps originals (no archive/delete), so the no-op
-        # re-run anti-joins the full already-ingested listing
+        # re-run checks the full already-ingested listing against the log
         os.makedirs(f"{src}/assets", exist_ok=True)
         for i in range(n_files):
             with open(f"{src}/assets/file_{i:05d}.txt", "wb") as f:

@@ -41,9 +41,11 @@ large-synthesized-scale sweeps).
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
